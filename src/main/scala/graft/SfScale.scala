@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic FK-consistent corpus scaler: writes a `mult`× copy of a
-  * driver testdata dir (ALL ten tables, not just the ScaleProbe trio) so
+  * driver testdata dir (ALL ten tables) so
   * the full Verify + DuckDB-oracle + Bench loop can run at sf1-equivalent
   * volume (10× sf0.1) inside this sandbox, which ships no sf1 directory.
   *
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *  - events: event_id' = id·mult + k, ts jittered k·7s, SAME user ids —
   *    timelines densify, the sessionization/dedup pressure case.
   *  - documents: near-dup clusters of `mult` (one unique suffix token per
-  *    copy) — the dedup-family stress shape, same as ScaleProbe.
+  *    copy) — the dedup-family stress shape.
   *  - embeddings: per-copy one-coordinate jitter, preserving near-dup
   *    geometry.
   *

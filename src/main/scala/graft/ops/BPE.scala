@@ -203,7 +203,7 @@ object BPE {
     * rows fit trivially and the distributed loop's floor is NOT data
     * volume but ~3 job schedules + fresh codegen per sequential merge
     * (measured: 256 capped merges >15 min distributed vs sub-second here —
-    * graft.BpeCapProbe / SURVEY §8 round 8). Semantics are pinned to the
+    * SURVEY §8 round 8). Semantics are pinned to the
     * distributed trainer by spec: same exact-integer pair counts (every
     * adjacent occurrence, frequency-weighted), same (count DESC, p1, p2)
     * tie-break, same greedy leftmost non-overlapping application.

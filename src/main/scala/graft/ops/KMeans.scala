@@ -414,32 +414,6 @@ object KMeans {
         (col("pos") + 1).cast("int").as("cell_rank"))
   }
 
-  /** The nprobe tune grid measured over TRAINED cells — same sample,
-    * same exact-truth joins, same integer bar as the label-cell
-    * derivation ([[Similarity.tuneGridFromRanked]]); k defaults to the
-    * corpus-adaptive centroid count. Memoized like the label grid.
-    */
-  private val trainedTuneCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    Seq[(Int, Long)]]()
-
-  def trainedTuneGridRows(
-      embeddings: DataFrame, k: Int = 0, iters: Int = Iters): Seq[(Int, Long)] = {
-    val kk = if (k > 0) k else adaptiveK(embeddings.count())
-    val key = (embeddings.queryExecution.analyzed, kk, iters)
-    trainedTuneCache.computeIfAbsent(key, _ =>
-      Similarity.tuneGridFromRanked(embeddings,
-        trainedCellsRanked(embeddings, Similarity.MaxDerivedNprobe, kk, iters)))
-  }
-
-  /** Smallest nprobe whose TRAINED-cell tune-sample recall meets the
-    * [[Similarity.TuneHitBar]]; −1 when even the full sweep misses it.
-    */
-  def derivedNprobeTrained(
-      embeddings: DataFrame, k: Int = 0, iters: Int = Iters): Int =
-    trainedTuneGridRows(embeddings, k, iters)
-      .find(_._2 >= Similarity.TuneHitBar).map(_._1).getOrElse(-1)
-
   /** nprobe-probed trained-IVF top-k: each query probes its `nprobe`
     * nearest TRAINED cells; corpus vectors live in their single home
     * cell. [[Similarity.ivfTopK]]'s equi-join plan with the learned

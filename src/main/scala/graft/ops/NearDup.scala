@@ -393,7 +393,7 @@ object NearDup {
     * Why this replaces the raw posting self-join (the engine's former
     * shape): a full inverted-index join costs Σ_w df(w)² — quadratic on
     * hot shingles (a 2-gram corpus here concentrates 99.997% of Σdf² in
-    * hot keys, see CapDemo). Under a rarest-first global token order, each
+    * hot keys). Under a rarest-first global token order, each
     * doc joins only on its first |A| − ⌊t·|A|⌋ + 1 tokens — any pair
     * sharing NONE of those has overlap ≤ ⌈t·|A|⌉ − 1 < t·|A|, hence
     * Jaccard < t (J ≥ t ⟹ |∩| ≥ t·|union| ≥ t·|A|). Hot tokens sort
@@ -917,9 +917,9 @@ object NearDup {
     * discriminative signal anyway); the posting join cost drops from
     * Σdf² to Σ min(df,cap)² over the capped vocabulary.
     *
-    * When the cap actually binds (measured — [[graft.CapDemo]]): on this
-    * corpus's degenerate 2-gram vocabulary, 99.997% of the uncapped Σdf²
-    * (73.2M of 73.2M posting pairs) comes from hot shingles, and hot df
+    * When the cap actually binds (measured): on this corpus's degenerate
+    * 2-gram vocabulary, 99.997% of the uncapped Σdf² (73.2M of 73.2M
+    * posting pairs) comes from hot shingles, and hot df
     * grows linearly with corpus size — so the uncapped join cost is
     * QUADRATIC in corpus scale while the capped index stays ≤ cap²·vocab.
     * On the 3-gram default the cap barely binds (avg df ≈ 37 < 100), so
@@ -1062,12 +1062,10 @@ object NearDup {
       "capped: df histogram")(
       dfc.groupBy("df").agg(count(lit(1)).as("n_words"))
         .collect()).map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    // cap + cost gate from ONE shared derivation ([[capFromHistogram]] —
-    // also the audit's, so the audit cannot diverge from the gate): the
+    // cap + cost gate from ONE derivation ([[capFromHistogram]]): the
     // capped posting self-join emits EXACTLY Σ_{df≤cap} df·(df−1)/2 rows;
     // refuse at plan time rather than OOM mid-shuffle (the r9 200×
-    // regime). Exact, so a probe can check the estimate against the
-    // measured join output 1:1.
+    // regime).
     val (capL, joinedPairs) = capFromHistogram(hist, fanoutBudget)
     val maxDf: Int = capL.toInt // capFromHistogram caps at Int.MaxValue
     if (joinedPairs > pairBudget) {
@@ -1299,11 +1297,9 @@ object NearDup {
     catch { case _: ArithmeticException => Long.MaxValue }
 
   /** The distinct-df-histogram → (derived cap, exact pair estimate)
-    * derivation — ONE implementation shared by the gated default path
-    * ([[cappedCommonCounts]]) and its audit ([[derivedCapJoinAudit]]), so
-    * the audit can never diverge from the gate it evidences, including in
-    * the saturating-overflow regime the gate was hardened for (ADVICE
-    * r10: the audit used to re-derive with plain arithmetic). Returns
+    * derivation behind the gated default path ([[cappedCommonCounts]]),
+    * with saturating arithmetic so the gate stays monotone in the
+    * overflow regime (ADVICE r10). Returns
     * `cap` (Int.MaxValue when the whole histogram fits the budget — no
     * capping buys anything) and `estJoinedPairs` =
     * Σ_{df≤cap} df·(df−1)/2 · n_words, the EXACT output row count of the
@@ -1329,46 +1325,6 @@ object NearDup {
       case (s, _) => s
     }
     (capOut, est)
-  }
-
-  /** Audit for the plan-time pair-cost gate (r10 VERDICT #2): one row
-    * with the derived cap, the histogram ESTIMATE of the capped posting
-    * self-join's output (`Σ_{df≤cap} df·(df−1)/2` — what the gate
-    * compares against `pairBudget`), and the MEASURED row count of that
-    * join actually executed. The two must be EQUAL (shingles are distinct
-    * per document, so each rare shingle contributes exactly df·(df−1)/2
-    * ordered pairs); the probe records both so the gate's contract is
-    * evidence, not argument. Cap AND estimate come from the SAME
-    * [[capFromHistogram]] the gate uses. Diagnostic-only: it pays the
-    * join it audits.
-    */
-  def derivedCapJoinAudit(
-      documents: DataFrame, n: Int = 3, fanoutBudget: Int = 100): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val sh = documents
-      .repartition(col("doc_id"))
-      .select(col("doc_id"),
-        graft.functions.ShingleSet.shingles(col("text"), n).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-    val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .cache()
-    val dfTab = ex.groupBy("shingle").agg(count(lit(1)).as("df")).cache()
-    // derive the cap from the df table ALREADY cached here — calling
-    // derivedDfCap(documents, …) would re-run the tokenize/shingle/df
-    // corpus pass a second time (r10 review find)
-    val hist = dfTab.groupBy("df").agg(count(lit(1)).as("n_words"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val (cap, est) = capFromHistogram(hist, fanoutBudget)
-    val exRare = ex
-      .join(dfTab.filter(col("df") <= cap).select("shingle"), Seq("shingle"))
-    val measured = exRare.toDF("shingle", "doc_a")
-      .join(exRare.toDF("shingle_b", "doc_b"),
-        col("shingle") === col("shingle_b") && col("doc_a") < col("doc_b"))
-      .count()
-    ex.unpersist(); dfTab.unpersist()
-    Seq((cap, est, measured))
-      .toDF("derived_cap", "est_joined_rows", "measured_joined_rows")
   }
 
   /** Oracle for `ngramJaccardPairsCapped(maxDf = 0)` — the SELF-TUNING

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.LongArrayDot.dotLong
@@ -35,8 +35,8 @@ import graft.functions.LongArrayDot.dotLong
   * subquantizers) — and the default SEARCH is [[pqAdcRefineTopK]] (ADC
   * shortlist + exact re-rank). The r1–r10 default (M=4, 8 codes = 12
   * bits/vector) was sized for oracle convenience and measured mean
-  * recall@5 of 0.0–0.46 (`PQTune`, SCALEPROBE_r10) — a library user got
-  * mostly-wrong neighbors. Measured with this default (PQTune, r11):
+  * recall@5 of 0.0–0.46 (SCALEPROBE_r10) — a library user got
+  * mostly-wrong neighbors. Measured with this default (r11):
   * pure-ADC 0.48 / refined 0.88 on the adversarial sf0.01 corpus (500
   * iid-random unit vectors — the hardest case for any quantizer), and
   * refined 1.00 at the 10× clone-structured probe corpus. The tiny
@@ -255,7 +255,7 @@ object PQ {
     */
   private def lutDf(
       embeddings: DataFrame, nQueries: Int, m: Int, codes: Int,
-      iters: Int, queryFrom: Int = 0): DataFrame = {
+      iters: Int): DataFrame = {
     val spark = embeddings.sparkSession
     val subDim = KMeans.Dim / m
     val cbRows = for {
@@ -265,7 +265,7 @@ object PQ {
     val codebook = spark.createDataFrame(cbRows)
       .toDF("s", "code", "cq", "cc")
     val queries = embeddings
-      .filter(col("vec_id") >= queryFrom && col("vec_id") < nQueries &&
+      .filter(col("vec_id") < nQueries &&
         col("embedding").isNotNull &&
         size(col("embedding")) === KMeans.Dim)
       .select(col("vec_id").as("query_id"), col("embedding"))
@@ -310,8 +310,8 @@ object PQ {
     */
   private def adcDists(
       embeddings: DataFrame, nQueries: Int, m: Int, codes: Int,
-      iters: Int, queryFrom: Int = 0): DataFrame = {
-    val lut = lutDf(embeddings, nQueries, m, codes, iters, queryFrom)
+      iters: Int): DataFrame = {
+    val lut = lutDf(embeddings, nQueries, m, codes, iters)
     val enc = encLong(embeddings, m, codes, iters)
     enc.join(broadcast(lut), Seq("s", "code"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -589,7 +589,7 @@ object PQ {
     * handled. Pass an explicit `refineFactor > 0` to override.
     *
     * The constant itself is MEASUREMENT-SIZED (r13, VERDICT r12 #7 —
-    * `graft.PQTune <sfDir> rfloor` sweeps it; PQTUNE_r13.json): on the
+    * PQTUNE_r13.json): on the
     * iid 1× corpus (n=2000) floor 10 serves recall 0.86 — below the
     * 0.9 bar the clone decades meet — while 16 measures 0.94 (12→0.88,
     * 24→0.96; the sf0.01 corpus reaches 1.0 from 12 up). 16 is the
@@ -672,12 +672,11 @@ object PQ {
     })
   }
 
-  /** The calibration at an EXPLICIT sample width (the PQTune `calsweep`
-    * measurement arm; [[calibratedRefineFloor]] passes the corpus-scaled
-    * width). Bar = the 48/50 ratio of the pair count
-    * ([[Similarity.tuneHitBarFor]]).
+  /** The calibration at an explicit sample width ([[calibratedRefineFloor]]
+    * passes the corpus-scaled width). Bar = the 48/50 ratio of the pair
+    * count ([[Similarity.tuneHitBarFor]]).
     */
-  private[graft] def calibratedRefineFloorAt(
+  private def calibratedRefineFloorAt(
       embeddings: DataFrame, nq: Int, m: Int = M, codes: Int = Codes,
       iters: Int = Iters): Int = {
     val needed = neededRanksDf(embeddings, nq, m, codes, iters)
@@ -868,13 +867,11 @@ object PQ {
   def pqAdcRefineTopK(
       embeddings: DataFrame, nQueries: Int = 10, topK: Int = 5,
       refineFactor: Int = 0, m: Int = M, codes: Int = Codes,
-      iters: Int = Iters, queryFrom: Int = 0): DataFrame = {
+      iters: Int = Iters): DataFrame = {
     // refineFactor 0 (the default) = DERIVE R from the code-frequency
     // histogram so the shortlist covers the corpus's deepest near-tie
     // family ([[derivedRefineFactor]]); a positive value is the explicit
-    // constant override. queryFrom > 0 serves the window
-    // [queryFrom, nQueries) — the out-of-sample evaluation hook (PQTune's
-    // holdout arm; the registered queries all serve from 0).
+    // constant override.
     val r =
       if (refineFactor > 0) refineFactor
       else derivedRefineFactor(embeddings, m, codes, iters)
@@ -883,12 +880,12 @@ object PQ {
     // the RefineFactor note for why a strict row_number cutoff caps
     // recall on clone-heavy corpora
     val sw = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"))
-    val short = adcDists(embeddings, nQueries, m, codes, iters, queryFrom)
+    val short = adcDists(embeddings, nQueries, m, codes, iters)
       .withColumn("srank", rank().over(sw))
       .filter(col("srank") <= lit(topK.toLong * r)) // long: R can be corpus-deep
       .select(col("query_id"), col("neighbor_id"))
     val queries = embeddings
-      .filter(col("vec_id") >= queryFrom && col("vec_id") < nQueries &&
+      .filter(col("vec_id") < nQueries &&
         col("embedding").isNotNull &&
         size(col("embedding")) === KMeans.Dim)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -946,41 +943,6 @@ object PQ {
       graft.ops.Similarity.bruteForceTopK(embeddings, nQueries, k),
       pqAdcRefineTopK(embeddings, nQueries, k, refineFactor, m, codes, iters),
       k)
-
-  /** OUT-OF-SAMPLE recall of the refine-path default on a DISJOINT query
-    * window `[from, until)` (r15, VERDICT r14 #6 — one shared
-    * implementation for PQTune's holdout arm and the scale probes, with
-    * the window width a parameter so the probes can run the 50-query
-    * window whose ±1.96·SE band is ~3× tighter than the 10-query one).
-    * The truth is the window's own brute-force top-k (one broadcast-
-    * queries corpus scan); the serving arm is [[pqAdcRefineTopK]] with
-    * the given refine factor (0 = the full derived default, exactly what
-    * production serves).
-    */
-  def pqRefineRecallHoldout(
-      embeddings: DataFrame,
-      from: Int = graft.ops.Similarity.TuneQueries,
-      until: Int = 2 * graft.ops.Similarity.TuneQueries,
-      k: Int = graft.ops.Similarity.TuneK,
-      refineFactor: Int = 0): DataFrame = {
-    val inWindow = (c: Column) => c >= from && c < until
-    val queries = embeddings.filter(inWindow(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
-    val scored = embeddings.repartition(col("vec_id"))
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        graft.ops.Similarity.dot(col("query_emb"), col("embedding"))
-          .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val truth = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    graft.ops.Similarity.recallVsTruth(
-      truth,
-      pqAdcRefineTopK(embeddings, nQueries = until, topK = k,
-        refineFactor = refineFactor, queryFrom = from),
-      k)
-  }
 
   def pqRefineRecallSql(
       nQueries: Int = 10, k: Int = 5, refineFactor: Int = 0,

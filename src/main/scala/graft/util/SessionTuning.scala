@@ -32,13 +32,10 @@ import org.apache.spark.sql.SparkSession
   * 1 MB (the Spark default) restores those but serializes the dense joins
   * again (q36 +1.6 s). 128 KB holds ≥ 14-30 tasks on the MB-scale dense
   * stages while letting KB-scale iteration shuffles collapse to 1-2
-  * tasks — best subset total of {16k, 64k, 128k, 256k, 1m}. The resolved
-  * default stays env-overridable so a deployment with genuinely
-  * byte-proportional work can restore the 1 MB floor without a rebuild.
+  * tasks — best subset total of {16k, 64k, 128k, 256k, 1m}.
   */
 object SessionTuning {
-  val MinCoalescedPartitionSize: String =
-    sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "128k")
+  val MinCoalescedPartitionSize = "128k"
 
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",

@@ -718,6 +718,48 @@ class CurationOpsSpec extends SparkSpec {
     assert(lb(90L) == (("aa", 0L)) && lb(91L) == (("aa", 0L)), lb.get(90L))
   }
 
+  test("quality classifier and lang labeler label their train-sample jobs " +
+    "distinctly (a profiler can tell the two apart)") {
+    // each trainer runs under its own job group; the listener keys every
+    // job's description by group, and the assertion polls the async bus
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          seen.add((String.valueOf(p.getProperty("spark.jobGroup.id")),
+            String.valueOf(p.getProperty("spark.job.description"))))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    def sampleLabels(group: String): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      seen.asScala.collect {
+        case (g, d) if g == group && d.endsWith("train sample") => d
+      }.toSet
+    }
+    try {
+      sc.setJobGroup("qc-labels", "quality classifier")
+      Curate.qualityClassifierWeights(qcCorpus(overlap = false)).collect()
+      sc.setJobGroup("lc-labels", "lang labeler")
+      Curate.langClassifierWeights(lcCorpus(overlap = false)).collect()
+      sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 15000
+      while ((sampleLabels("qc-labels").isEmpty ||
+          sampleLabels("lc-labels").isEmpty) &&
+          System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      val qc = sampleLabels("qc-labels")
+      val lc = sampleLabels("lc-labels")
+      assert(qc.nonEmpty && lc.nonEmpty, s"sample jobs unlabeled: qc=$qc lc=$lc")
+      assert(qc.intersect(lc).isEmpty, s"shared sample label: qc=$qc lc=$lc")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("lang classifier: null labels never become classes (ADVICE r17) " +
     "and null-labeled docs are still scored against the kept classes") {
     val rnd = new scala.util.Random(13)

@@ -2,7 +2,7 @@
 # Run a graft main class against the sbt-compiled classes + the Spark
 # image jars, with the same JDK17 --add-opens set as build.sbt. Keeps
 # long probes off the sbt lock so tests/compiles can proceed in parallel.
-#   tools/runmain.sh graft.ScaleProbe 10
+#   tools/runmain.sh graft.Verify /root/testdata/sf0.01 /tmp/verify01
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
@@ -14,9 +14,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# SPARK_GRAFT_JVM_EXTRA: extra JVM flags (e.g. -XX:-DontCompileHugeMethods
-# for the r17 q121 JIT experiment) — probe arms only, never a default
-exec java $OPENS ${SPARK_GRAFT_JVM_EXTRA:-} \
+exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" -XX:ReservedCodeCacheSize=512m \
   -cp "$CP" "$@"
