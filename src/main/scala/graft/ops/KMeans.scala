@@ -151,7 +151,7 @@ object KMeans {
     * memoization cannot change any result, only skip repeated training.
     *
     * Bounded LRU (r14 VERDICT #5), same pattern and rationale as
-    * [[graft.ops.PQ]] `refineCache` / [[Similarity]] `tuneCache`: the key
+    * [[graft.ops.PQ]] `refineCache`: the key
     * retains the full canonicalized logical plan (and, through
     * `LogicalRelation`, file-index state), so a long-lived session
     * training against many distinct corpora would otherwise accumulate
@@ -186,10 +186,12 @@ object KMeans {
     val xq = corpus(embeddings, dim)
     val sample = trainingSample(xq)
     xq.unpersist() // one pass built the sample; iterations read its blocks
-    var cents = seedCentroids(sample, k)
-    for (_ <- 0 until iters)
-      cents = updateCentroids(sample, assign(sample, cents), cents, dim)
-    cents
+    try {
+      var cents = seedCentroids(sample, k)
+      for (_ <- 0 until iters)
+        cents = updateCentroids(sample, assign(sample, cents), cents, dim)
+      cents
+    } finally graft.util.Checkpoints.free(sample) // the model is collected
   }
 
   /** Train and return the model relation: one row per (cluster_id, dim)
@@ -386,7 +388,7 @@ object KMeans {
     * [[assignTrainedCells]] home cell by construction — same argmin,
     * same tie-break). This is [[Similarity.ivfCellsRanked]]'s contract
     * with the learned router instead of the label one, which is what
-    * lets the nprobe tune grid and the probed search below run
+    * lets the probed search below run through the label search's join
     * unchanged over trained cells (r18, VERDICT r17 #3).
     *
     * Per row: k struct(d, c) candidates → sort_array → slice(1, maxRank)
@@ -416,31 +418,20 @@ object KMeans {
 
   /** nprobe-probed trained-IVF top-k: each query probes its `nprobe`
     * nearest TRAINED cells; corpus vectors live in their single home
-    * cell. [[Similarity.ivfTopK]]'s equi-join plan with the learned
-    * router — candidates ≈ nprobe·n/k per query side, against
-    * [[ivfTopKTrained]]'s home-cell-only kernel (nprobe = 1).
+    * cell. The [[trainedCellsRanked]] assignment meets
+    * [[Similarity.ivfTopKFromRanked]]'s (vec_id, cell, cell_rank)
+    * contract, so this serves through the same (salted) probe/home join
+    * as [[Similarity.ivfTopK]] with the learned router — candidates ≈
+    * nprobe·n/k per query side, against [[ivfTopKTrained]]'s
+    * home-cell-only kernel (nprobe = 1).
     */
   def ivfTopKTrainedProbed(
       embeddings: DataFrame, topK: Int = 3, nprobe: Int = 1,
       k: Int = K, iters: Int = Iters): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranked = trainedCellsRanked(embeddings, nprobe, k, iters).cache()
-    val emb = embeddings.select(col("vec_id"), col("embedding"))
-    val a = emb.join(ranked, "vec_id")
-      .toDF("query_id", "query_emb", "cell_a", "cell_rank")
-    val b = emb.join(ranked.filter(col("cell_rank") === 1), "vec_id")
-      .toDF("neighbor_id", "emb_b", "cell_b", "crb")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
     // ranked-assignment cache freed after the caller's action (r19 §5)
+    val ranked = trainedCellsRanked(embeddings, nprobe, k, iters).cache()
     graft.util.CacheScope.freeAfterUse(
-      a.join(b, col("cell_a") === col("cell_b") && col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          Similarity.dot(col("query_emb"), col("emb_b")).as("cosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= topK)
-        .orderBy("query_id", "rank"),
-      Seq(ranked))
+      Similarity.ivfTopKFromRanked(embeddings, ranked, topK), Seq(ranked))
   }
 
   /** Semantic deduplication over the trained cells — the SemDeDup recipe
@@ -463,13 +454,15 @@ object KMeans {
       embeddings: DataFrame, k: Int = K, iters: Int = Iters,
       tau: Double = Similarity.CosineThreshold): DataFrame = {
     val model = trainedModel(embeddings, k, iters)
-    // eager-materialize (id, emb, cell, dist): three consumers below (two
-    // join sides + the surviving anti-join) read blocks, not the pipeline
+    // cache (id, emb, cell, dist): three consumers below (two join sides
+    // + the surviving anti-join) read blocks, not the pipeline. A cache,
+    // not a localCheckpoint: after CacheScope drops the blocks a second
+    // action on the result recomputes them from lineage
     val cells = assignTrainedCells(
         embeddings.select(col("vec_id"), col("embedding")), model,
         withDist = true)
       .select(col("vec_id"), col("embedding"), col("cell"), col("cent_dist"))
-      .localCheckpoint()
+      .cache()
     val a = cells.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
       col("cell"), col("cent_dist").as("dist_a"))
     val b = cells.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
@@ -480,7 +473,7 @@ object KMeans {
         (col("dist_b") > col("dist_a") ||
           (col("dist_b") === col("dist_a") && col("id_b") < col("id_a"))))
       .select(col("id_a")).distinct()
-    // checkpointed cell relation freed after the caller's action (r19 §5)
+    // cached cell relation freed after the caller's action (r19 §5)
     graft.util.CacheScope.freeAfterUse(
       cells.join(dominated, col("vec_id") === col("id_a"), "left_anti")
         .select(col("vec_id"), col("cell"), col("cent_dist"))

@@ -259,9 +259,9 @@ object NearDup {
   val BucketBudget = 64
 
   /** Plan-time joined-row budget for the derived-cap pair stage
-    * ([[ngramJaccardPairsCapped]] / [[ngramContainmentCapped]] with
-    * `maxDf = 0`, the default): the posting self-join over the capped
-    * vocabulary produces EXACTLY `Σ_{df≤cap} df·(df−1)/2` rows (shingles
+    * ([[ngramJaccardPairsCapped]] / [[ngramContainmentCapped]]): the
+    * posting self-join over the capped vocabulary produces EXACTLY
+    * `Σ_{df≤cap} df·(df−1)/2` rows (shingles
     * are distinct per document), and on clone-heavy corpora that pair
     * volume is inherently quadratic in the duplication factor — unbounded
     * where the keep-list's output is ≤ n. The entry points compute this
@@ -911,7 +911,7 @@ object NearDup {
   }
 
   /** The documented scale escalation for [[ngramJaccardPairs]]: drop
-    * shingles whose document frequency exceeds `maxDf` from the inverted
+    * shingles whose document frequency exceeds the cap from the inverted
     * index before the self-join. Candidate recall is exact for any pair
     * sharing at least one sub-hot shingle (hot shingles carry no
     * discriminative signal anyway); the posting join cost drops from
@@ -939,37 +939,28 @@ object NearDup {
     *     (tiny — just the over-cap vocabulary) for the exact hot
     *     correction. The full arrays never leave the document scan.
     */
-  /** DEFAULT CONTRACT (r10, after the r9 200× probe): `maxDf = 0` — the
-    * SELF-TUNING derived cap — is the default. The cap is derived from the
-    * corpus df histogram (same rule as [[derivedDfCap]]: largest cap whose
-    * capped join cost stays within `fanoutBudget` joined postings per
-    * posting), so recall adapts to the corpus: never tighter than the
-    * budget, effectively uncapped when the uncapped cost already fits.
+  /** CAP POLICY (r10, after the r9 200× probe): the cap is SELF-TUNING,
+    * derived from the corpus df histogram (same rule as [[derivedDfCap]]:
+    * largest cap whose capped join cost stays within `fanoutBudget`
+    * joined postings per posting), so recall adapts to the corpus: never
+    * tighter than the budget, effectively uncapped when the uncapped cost
+    * already fits. A constant cap is not offered: under heavy duplication
+    * it has ZERO recall — at 200× duplication every original shingle
+    * exceeds df 100, the capped inverted index EMPTIES, and the op returns
+    * 0 rows while real near-dup structure exists (measured:
+    * `SCALEPROBE_r9_200x.json`). `fanoutBudget` is the one cost dial.
     *
-    * Passing a CONSTANT `maxDf > 0` is the explicit override, and it
-    * carries a documented footgun: under heavy duplication a constant cap
-    * has ZERO recall — at 200× duplication every original shingle exceeds
-    * df 100, the capped inverted index EMPTIES, and the op returns 0 rows
-    * while real near-dup structure exists (measured:
-    * `SCALEPROBE_r9_200x.json`). Use the constant form only when the cap
-    * is a deliberate, corpus-informed recall trade — or reach for the
-    * keep-list ops ([[dedupKeepList]] / [[minhashNearDups]]), whose hub
-    * budget degrades gracefully and whose output is ≤ n by construction.
-    *
-    * The derived default additionally COST-GATES the pair stage: the
-    * joined-row count is computed exactly from the df histogram before the
-    * self-join launches, and the call refuses above `pairBudget` with a
-    * keep-list redirect (see [[PairBudget]]) — the pair relation is
-    * inherently quadratic on clone-heavy corpora, and that must fail at
-    * plan time, not as an executor OOM mid-shuffle. The constant-cap
-    * override stays fully LAZY (no job at construction time), so it
-    * cannot be cost-gated — documented trade.
+    * The pair stage is COST-GATED: the joined-row count is computed
+    * exactly from the df histogram before the self-join launches, and the
+    * call refuses above `pairBudget` with a keep-list redirect (see
+    * [[PairBudget]]) — the pair relation is inherently quadratic on
+    * clone-heavy corpora, and that must fail at plan time, not as an
+    * executor OOM mid-shuffle.
     */
   def ngramJaccardPairsCapped(
       documents: DataFrame, n: Int = 3, minJaccard: Double = 0.5,
-      maxDf: Int = 0, fanoutBudget: Int = 100,
-      pairBudget: Long = PairBudget): DataFrame =
-    cappedCommonCounts(documents, n, maxDf,
+      fanoutBudget: Int = 100, pairBudget: Long = PairBudget): DataFrame =
+    cappedCommonCounts(documents, n,
       mc => mc.cast("double") / (col("n_a") + col("n_b") - mc) >= minJaccard,
       fanoutBudget, pairBudget)
       .select(col("doc_a"), col("doc_b"),
@@ -985,16 +976,13 @@ object NearDup {
     * prune. Shares q38's documented recall contract: pairs overlapping
     * ONLY in over-cap shingles are not candidates — which is exactly the
     * hot-boilerplate overlap containment detection exists to ignore.
-    * Default/override/cost-gate contract identical to
-    * [[ngramJaccardPairsCapped]]: `maxDf = 0` (default) self-derives the
-    * cap and refuses past `pairBudget`; a constant `maxDf` is the lazy,
-    * ungated override with the 200×-measured zero-recall footgun.
+    * Cap policy and cost gate identical to [[ngramJaccardPairsCapped]]:
+    * the cap is self-derived and the call refuses past `pairBudget`.
     */
   def ngramContainmentCapped(
       documents: DataFrame, n: Int = 3, minContainment: Double = 0.9,
-      maxDf: Int = 0, fanoutBudget: Int = 100,
-      pairBudget: Long = PairBudget): DataFrame =
-    cappedCommonCounts(documents, n, maxDf,
+      fanoutBudget: Int = 100, pairBudget: Long = PairBudget): DataFrame =
+    cappedCommonCounts(documents, n,
       mc => mc.cast("double") / least(col("n_a"), col("n_b")) >= minContainment,
       fanoutBudget, pairBudget)
       .select(explode(array(
@@ -1016,9 +1004,8 @@ object NearDup {
     * count, so it can only over-keep, never over-drop).
     */
   private def cappedCommonCounts(
-      documents: DataFrame, n: Int, maxDf0: Int,
-      prune: Column => Column, fanoutBudget: Int = 100,
-      pairBudget: Long = Long.MaxValue): DataFrame = {
+      documents: DataFrame, n: Int, prune: Column => Column,
+      fanoutBudget: Int, pairBudget: Long): DataFrame = {
     val sh = documents
       .repartition(col("doc_id"))
       .select(col("doc_id"), graft.functions.ShingleSet.shingles(col("text"), n).as("shingles"))
@@ -1026,28 +1013,7 @@ object NearDup {
       .cache()
     val dfTab = sh.select(explode(col("shingles")).as("shingle"))
       .groupBy("shingle").agg(count(lit(1)).as("df"))
-    if (maxDf0 > 0) {
-      // Explicit constant cap: fully LAZY — no Spark job runs at
-      // DataFrame-construction time, so plan-only consumers (Explain,
-      // plan-shape specs, composition into bigger dataflows) cost
-      // nothing (ADVICE r9). The price: no clean-corpus fast path and no
-      // plan-time cost gate — both need driver statistics. A caller who
-      // EXPLICITLY tightens pairBudget alongside a constant cap is asking
-      // for a gate this branch cannot provide — refuse loudly rather
-      // than silently ignore the safety argument (r10 review find).
-      if (pairBudget != PairBudget && pairBudget != Long.MaxValue)
-        throw new IllegalArgumentException(
-          "pairBudget is only enforced by the derived default (maxDf = 0): " +
-          "the constant-cap override is lazy and computes no plan-time " +
-          "statistics. Use maxDf = 0, or drop the custom pairBudget.")
-      // The hot-flag relation is derived in-plan from the uncached df
-      // aggregation.
-      return hotCappedCounts(sh,
-        dfTab.filter(col("df") > maxDf0)
-          .select(col("shingle"), lit(true).as("hot_flag")),
-        prune)
-    }
-    // maxDf = 0 (the default): the [[derivedDfCap]] rule, computed on the
+    // The cap is the [[derivedDfCap]] rule, computed on the
     // DISTINCT-df histogram collected to the driver (≪ vocabulary —
     // dfCapStats' "driver-trivial at any corpus size" argument, applied
     // literally). The same histogram then answers, with NO further Spark
@@ -1112,21 +1078,19 @@ object NearDup {
     // cache is released right after the caller's action instead, and the
     // checkpoint pass disappears — one shared materialization feeds the
     // cap derivation AND the hot-set broadcast (VERDICT r18 #4).
-    val hotSet = dfc.filter(col("df") > maxDf)
-      .select(col("shingle"), lit(true).as("hot_flag"))
-    graft.util.CacheScope.freeAfterUse(
-      hotCappedCounts(sh, hotSet, prune), Seq(dfc))
+    hotCappedCounts(sh, dfc, maxDf, prune)
   }
 
-  /** The hot-vocabulary capped machine shared by the lazy constant-cap
-    * path and the derived path's hot branch: flag postings against the
-    * broadcast hot set, one capped posting self-join for candidates +
-    * exact rare counts, per-doc scalar upper-bound prune, exact hot
-    * correction for survivors only.
+  /** The capped machine's hot branch: flag postings against the broadcast
+    * hot set (`df > maxDf` over the cached df table), one capped posting
+    * self-join for candidates + exact rare counts, per-doc scalar
+    * upper-bound prune, exact hot correction for survivors only.
     */
   private def hotCappedCounts(
-      sh: DataFrame, hotSet: DataFrame,
+      sh: DataFrame, dfc: DataFrame, maxDf: Int,
       prune: Column => Column): DataFrame = {
+    val hotSet = dfc.filter(col("df") > maxDf)
+      .select(col("shingle"), lit(true).as("hot_flag"))
     val ex = sh
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
       .cache()
@@ -1171,9 +1135,7 @@ object NearDup {
     // Exact hot correction for the survivors only (hot arrays are tiny).
     val hA = docStats.select(col("doc_id").as("doc_a_h"), col("hot_arr").as("hot_a"))
     val hB = docStats.select(col("doc_id").as("doc_b_h"), col("hot_arr").as("hot_b"))
-    // intra-query caches (and the derived path's checkpointed hot set)
-    // freed after the caller's action (r19 §5); the constant-cap path's
-    // hotSet is an in-plan relation — freeing it is a no-op there.
+    // intra-query caches freed after the caller's action (r19 §5)
     graft.util.CacheScope.freeAfterUse(
       survivors
         .join(hA, col("doc_a") === col("doc_a_h"))
@@ -1182,7 +1144,7 @@ object NearDup {
           (col("n_rare") + size(array_intersect(col("hot_a"), col("hot_b")))
             .cast("long")).as("n_common"),
           col("n_a"), col("n_b")),
-      Seq(sh, hotSet, ex, docStats, exCapped))
+      Seq(sh, dfc, ex, docStats, exCapped))
   }
 
   /** Distinct-shingle document frequencies — the inverted-index df table
@@ -1272,9 +1234,9 @@ object NearDup {
           .otherwise(col("valid_max").cast("long")).as("derived_cap"))
   }
 
-  /** The derived cap as a scalar, for callers passing `maxDf = 0` to the
-    * capped entry points: `Int.MaxValue` (no capping) when the corpus is
-    * light-tailed enough that the uncapped join already fits the budget.
+  /** The derived cap as a scalar — the cap the capped entry points apply:
+    * `Int.MaxValue` (no capping) when the corpus is light-tailed enough
+    * that the uncapped join already fits the budget.
     */
   def derivedDfCap(
       documents: DataFrame, n: Int = 3, fanoutBudget: Int = 100): Int = {
@@ -1327,12 +1289,12 @@ object NearDup {
     (capOut, est)
   }
 
-  /** Oracle for `ngramJaccardPairsCapped(maxDf = 0)` — the SELF-TUNING
+  /** Oracle for [[ngramJaccardPairsCapped]] — the SELF-TUNING
     * entry point: the cap itself is DERIVED IN SQL from the same
     * distinct-df histogram rule as [[derivedDfCap]] (largest cap whose
     * `Σ_{df≤cap} df²` stays within `fanoutBudget · postings`; cap =
     * max_df when even uncapped fits, i.e. no trim), then applied by the
-    * same rare-postings candidate pipeline as the constant-cap oracle.
+    * rare-postings candidate pipeline (postings with df ≤ cap).
     * This closes the adaptive loop the way q46 does for the IVF p ≥ 1
     * branch: the plan-time derivation is hash-checked end-to-end, not
     * just its statistic (q98).
@@ -1368,10 +1330,9 @@ object NearDup {
        |WHERE jaccard >= $minJaccard ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** Oracle for `ngramContainmentCapped(maxDf = 0)` — the derived-cap
-    * default: same in-SQL cap derivation as
-    * [[ngramJaccardPairsDerivedSql]], same directed containment output as
-    * [[ngramContainmentCappedSql]].
+  /** Oracle for [[ngramContainmentCapped]]: the in-SQL cap derivation of
+    * [[ngramJaccardPairsDerivedSql]], with both directions of every
+    * candidate pair as the containment output.
     */
   def ngramContainmentDerivedSql(
       n: Int = 3, minContainment: Double = 0.9,
@@ -1417,29 +1378,6 @@ object NearDup {
        |ORDER BY contained, container""".stripMargin
   }
 
-  def ngramJaccardPairsCappedSql(
-      n: Int = 3, minJaccard: Double = 0.5, maxDf: Int = 100): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
-       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
-       |rare AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= $maxDf),
-       |exc AS (SELECT e.doc_id, e.shingle FROM ex e JOIN rare r ON e.shingle = r.shingle),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM exc a JOIN exc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id)
-       |SELECT doc_a, doc_b, jaccard FROM (
-       |  SELECT c.doc_a, c.doc_b,
-       |    CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-       |      / len(list_distinct(x.shingles || y.shingles)) AS jaccard
-       |  FROM cand c JOIN sh x ON c.doc_a = x.doc_id JOIN sh y ON c.doc_b = y.doc_id)
-       |WHERE jaccard >= $minJaccard ORDER BY doc_a, doc_b""".stripMargin
-  }
-
   def dfCapStatsSql(
       n: Int = 3, maxDf: Int = 100, fanoutBudget: Int = 100): String = {
     val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
@@ -1467,41 +1405,6 @@ object NearDup {
        |  pairs_uncapped, pairs_capped,
        |  CAST(CASE WHEN valid_max = max_df THEN -1 ELSE valid_max END AS BIGINT) AS derived_cap
        |FROM tot, cap""".stripMargin
-  }
-
-  def ngramContainmentCappedSql(
-      n: Int = 3, minContainment: Double = 0.9, maxDf: Int = 100): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
-       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
-       |rare AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= $maxDf),
-       |exc AS (SELECT e.doc_id, e.shingle FROM ex e JOIN rare r ON e.shingle = r.shingle),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM exc a JOIN exc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-       |pc AS (
-       |  SELECT c.doc_a, c.doc_b,
-       |    len(list_intersect(x.shingles, y.shingles)) AS n_common,
-       |    len(x.shingles) AS n_a, len(y.shingles) AS n_b
-       |  FROM cand c JOIN sh x ON c.doc_a = x.doc_id JOIN sh y ON c.doc_b = y.doc_id),
-       |directed AS (
-       |  SELECT doc_a AS contained, doc_b AS container, n_common,
-       |    n_a AS n_contained, n_b AS n_container FROM pc
-       |  UNION ALL
-       |  SELECT doc_b AS contained, doc_a AS container, n_common,
-       |    n_b AS n_contained, n_a AS n_container FROM pc)
-       |SELECT contained, container, CAST(n_common AS BIGINT) AS n_common,
-       |  CAST(n_contained AS BIGINT) AS n_contained,
-       |  CAST(n_container AS BIGINT) AS n_container,
-       |  CAST(n_common AS DOUBLE) / n_contained AS containment
-       |FROM directed
-       |WHERE CAST(n_common AS DOUBLE) / n_contained >= $minContainment
-       |ORDER BY contained, container""".stripMargin
   }
 
   // ---------------------------------------------------------------- SimHash

@@ -296,14 +296,9 @@ object PQ {
     */
   def pqAdcTopK(
       embeddings: DataFrame, nQueries: Int = 10, topK: Int = 5,
-      m: Int = M, codes: Int = Codes, iters: Int = Iters): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    adcDists(embeddings, nQueries, m, codes, iters)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
-  }
+      m: Int = M, codes: Int = Codes, iters: Int = Iters): DataFrame =
+    Similarity.topKPerQuery(adcDists(embeddings, nQueries, m, codes, iters),
+      topK, Seq(col("adc_dist"), col("neighbor_id")))
 
   /** The shared ADC scoring stage: (query_id, neighbor_id, adc_dist) for
     * every corpus vector against every query's lookup tables.
@@ -350,29 +345,25 @@ object PQ {
         size(col("embedding")) === KMeans.Dim)
       .select(col("vec_id").as("query_id"),
         KMeans.quantize(col("embedding")).as("qx"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cdist"), col("cell"))
-    val probed = queries.crossJoin(broadcast(centDf)) // k-row broadcast
-      .withColumn("cdist",
-        dotLong(col("qx"), col("qx")) - lit(2L) * dotLong(col("qx"), col("cq"))
-          + col("cc"))
-      .withColumn("crank", row_number().over(pw))
-      .filter(col("crank") <= nprobe)
+    // the probe cells are a per-query top-nprobe over centroid distance
+    val probed = Similarity.topKPerQuery(
+        queries.crossJoin(broadcast(centDf)) // k-row broadcast
+          .withColumn("cdist",
+            dotLong(col("qx"), col("qx")) - lit(2L) * dotLong(col("qx"), col("cq"))
+              + col("cc")),
+        nprobe, Seq(col("cdist"), col("cell")))
       .select(col("query_id"), col("cell"))
     val cands = probed.join(cells, "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
     val lut = lutDf(embeddings, nQueries, m, codes, iters)
     val enc = encLong(embeddings, m, codes, iters)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    cands.join(enc, "vec_id")
-      .join(broadcast(lut), Seq("query_id", "s", "code"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("ld").as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
+    Similarity.topKPerQuery(
+      cands.join(enc, "vec_id")
+        .join(broadcast(lut), Seq("query_id", "s", "code"))
+        .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+        .agg(sum("ld").as("adc_dist")),
+      topK, Seq(col("adc_dist"), col("neighbor_id")))
   }
 
   def ivfPqTopKSql(
@@ -889,22 +880,19 @@ object PQ {
         col("embedding").isNotNull &&
         size(col("embedding")) === KMeans.Dim)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
     // NO broadcast hint on the shortlist: it is ≈ nQueries·R·k rows on
     // normal corpora, but the tie-inclusive cutoff means a degenerate
     // all-tied corpus expands it toward corpus size (the documented
     // graceful degrade to exact scoring) — a forced broadcast would turn
     // that degrade into a driver/executor OOM (ADVICE r11). AQE sees the
     // true shortlist size at runtime and broadcasts exactly when small.
-    embeddings.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-      .join(short, "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        Similarity.dot(col("q_emb"), col("n_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
+    Similarity.topKPerQuery(
+      embeddings.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
+        .join(short, "neighbor_id")
+        .join(broadcast(queries), "query_id")
+        .select(col("query_id"), col("neighbor_id"),
+          Similarity.dot(col("q_emb"), col("n_emb")).as("cosine")),
+      topK)
   }
 
   def pqAdcRefineTopKSql(

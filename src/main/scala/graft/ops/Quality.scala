@@ -47,7 +47,18 @@ object Quality {
     * `grouping()` disambiguates the total row from the valid (null-error)
     * group. Returns (metrics row, error → count).
     */
-  def batchMetricsWithErrors(df: DataFrame): (org.apache.spark.sql.Row, Map[String, Long]) = {
+  def batchMetricsWithErrors(df: DataFrame): (org.apache.spark.sql.Row, Map[String, Long]) =
+    // rollup over an EMPTY frame emits zero rows (unlike a global agg) —
+    // fall back to the global-agg row so callers get total_events = 0
+    // instead of a NoSuchElementException
+    batchRollup(df).getOrElse((batchMetrics(df).collect()(0), Map.empty))
+
+  /** [[batchMetricsWithErrors]]'s single job, with the empty frame as
+    * `None` — the rollup emits no total row exactly when the frame has no
+    * rows, so streaming batches learn emptiness from the metrics job
+    * itself instead of a separate `isEmpty` probe.
+    */
+  def batchRollup(df: DataFrame): Option[(org.apache.spark.sql.Row, Map[String, Long])] = {
     val rows = df
       .rollup(col("validation_errors"))
       .agg(
@@ -69,15 +80,10 @@ object Quality {
           .otherwise((col("valid_events").cast("double") /
             col("total_events").cast("double")) * 100.0))
       .collect()
-    // rollup over an EMPTY frame emits zero rows (unlike a global agg) —
-    // fall back to the global-agg row so callers get total_events = 0
-    // instead of a NoSuchElementException
-    val total = rows.find(_.getAs[Int]("is_total") == 1)
-      .getOrElse(batchMetrics(df).collect()(0))
     val errors = rows.iterator
       .filter(r => r.getAs[Int]("is_total") == 0 && r.getAs[String]("validation_errors") != null)
       .map(r => r.getAs[String]("validation_errors") -> r.getAs[Long]("total_events"))
       .toMap
-    (total, errors)
+    rows.find(_.getAs[Int]("is_total") == 1).map(_ -> errors)
   }
 }

@@ -354,12 +354,27 @@ object Similarity {
       .join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         dot(col("query_emb"), col("embedding")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
+    topKPerQuery(scored, k)
+  }
+
+  /** The per-query top-k rule every search in the similarity family ends
+    * in (brute force, LSH, IVF, trained IVF, PQ): number each query's rows
+    * by `order` (row_number, so `order` ends on a unique key and ties break
+    * deterministically), keep ranks ≤ k, sort by (query_id, rank).
+    * `within` adds partition keys for a top-k per (query, …) group. It is
+    * the one place the rule lives, so a bounded-candidate top-k (REPOSE,
+    * ICDE 2021) replaces it here for every search at once.
+    */
+  private[ops] def topKPerQuery(
+      scored: DataFrame, k: Int,
+      order: Seq[Column] = Seq(col("cosine").desc, col("neighbor_id")),
+      within: Seq[String] = Nil): DataFrame = {
+    val keys = ("query_id" +: within).map(col)
     scored
-      .withColumn("rank", row_number().over(w))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(keys: _*).orderBy(order: _*)))
       .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+      .orderBy(keys :+ col("rank"): _*)
   }
 
   def bruteForceTopKSql(nQueries: Int = 10, k: Int = 5): String =
@@ -508,15 +523,12 @@ object Similarity {
       col("bucket").as("bucket_a"))
     val b = withB.select(col("vec_id").as("neighbor_id"), col("embedding").as("emb_b"),
       col("bucket").as("bucket_b"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
     graft.util.CacheScope.freeAfterUse(
-      a.join(b, col("bucket_a") === col("bucket_b") && col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          dot(col("query_emb"), col("emb_b")).as("cosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .orderBy("query_id", "rank"),
+      topKPerQuery(
+        a.join(b, col("bucket_a") === col("bucket_b") && col("query_id") =!= col("neighbor_id"))
+          .select(col("query_id"), col("neighbor_id"),
+            dot(col("query_emb"), col("emb_b")).as("cosine")),
+        k),
       Seq(withB))
   }
 
@@ -651,12 +663,13 @@ object Similarity {
   }
 
   /** The search join over an already-ranked (vec_id, cell, cell_rank ≤
-    * nprobe) assignment — factored out (r18) so [[ivfTopKAdaptive]]'s
-    * serving pass reuses the SAME cached assignment its nprobe derivation
-    * already computed (`ivfCellsRanked(np)` ≡ `ivfCellsRanked(MaxDerivedNprobe)
-    * .filter(cell_rank ≤ np)` — the window rank is nprobe-independent),
-    * instead of rebuilding the centroid + assignment pipeline a second
-    * time inside the same query.
+    * nprobe) assignment whose rank-1 row is the vector's single home cell
+    * — the one probe/home join of every IVF search: [[ivfTopK]],
+    * [[ivfTopKAdaptive]]'s serving pass (which reuses the assignment its
+    * nprobe derivation already computed: `ivfCellsRanked(np)` ≡
+    * `ivfCellsRanked(MaxDerivedNprobe).filter(cell_rank ≤ np)`, the window
+    * rank is nprobe-independent) and the trained-cell search
+    * [[graft.ops.KMeans.ivfTopKTrainedProbed]].
     */
   private[ops] def ivfTopKFromRanked(
       embeddings: DataFrame, ranked: DataFrame, k: Int): DataFrame = {
@@ -677,14 +690,11 @@ object Similarity {
         b0.withColumn("salt_b", explode(sequence(lit(0), lit(salts - 1)))),
         col("cell_a") === col("cell_b") && col("salt_a") === col("salt_b")
           && col("query_id") =!= col("neighbor_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    a.join(b, cond)
-      .select(col("query_id"), col("neighbor_id"),
-        dot(col("query_emb"), col("emb_b")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+    topKPerQuery(
+      a.join(b, cond)
+        .select(col("query_id"), col("neighbor_id"),
+          dot(col("query_emb"), col("emb_b")).as("cosine")),
+      k)
   }
 
   /** Sub-plane count that keeps expected cell population ≤ `budget`:
@@ -697,47 +707,23 @@ object Similarity {
   def adaptiveSubPlanes(n: Long, budget: Long = CellBudget): Int =
     (0 to MaxSubPlanes).find(p => n <= budget * (1L << p)).getOrElse(MaxSubPlanes)
 
-  /** Session memo for [[tuneGridRows]] — the [[graft.ops.PQ]] `refineCache`
-    * pattern verbatim: the grid is deterministic in (corpus plan, budget),
-    * ten small rows, so memoization only skips repeated tune jobs, never
-    * changes a result. Bounded LRU for the same reason (the key retains
-    * the analyzed plan); same same-plan-same-data assumption — corpus
-    * snapshots are immutable paths, new snapshot = new plan = fresh tune.
+  /** The tune grid's input: (derived sub-plane count p, the
+    * [[MaxDerivedNprobe]]-ranked assignment, cached). Built once per call
+    * and passed to the grid and the serving search; the caller frees it.
     */
-  private val tuneCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-    Seq[(Int, Long)]]()
-
-  /** The MaxDerivedNprobe-ranked assignment behind the tune grid, memoized
-    * beside [[tuneCache]] (r18): the serving search needs exactly this
-    * relation filtered to `cell_rank ≤ np`, so sharing the cached handle
-    * lets [[ivfTopKAdaptive]] skip rebuilding the centroid + assignment
-    * pipeline after the derivation already ran it. Same key, same
-    * lifetime, same same-plan-same-data assumption as the grid memo; a
-    * session `clearCache()` only drops the blocks — the handle then
-    * recomputes lazily with unchanged semantics.
-    */
-  private val rankedCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-    (Int, DataFrame)]()
-
-  /** (derived sub-plane count p, the memoized ranked assignment). */
-  private def rankedForTune(
+  private def tuneRanked(
       embeddings: DataFrame, budget: Long): (Int, DataFrame) = {
-    val key = (embeddings.queryExecution.analyzed, budget)
-    rankedCache.computeIfAbsent(key, _ => {
-      val p = graft.util.JobDesc.labeled(embeddings.sparkSession,
-        "ivf-derive: corpus size")(
-        adaptiveSubPlanes(embeddings.count(), budget))
-      // NOT eagerly materialized (r19, measured): the grid's concurrent
-      // broadcast builds LOOK like they race this cache (several
-      // overlapping ~0.65 s jobs in q121's profile), but the block
-      // manager locks each cached partition while the first task
-      // computes it — the others wait, then read. An up-front count()
-      // A/B'd flat (q121 4.52→4.71 s, q36 3.15→3.20 s medians) while
-      // paying one extra job, so the lazy cache stands.
-      (p, ivfCellsRanked(embeddings, MaxDerivedNprobe, p).cache())
-    })
+    val p = graft.util.JobDesc.labeled(embeddings.sparkSession,
+      "ivf-derive: corpus size")(
+      adaptiveSubPlanes(embeddings.count(), budget))
+    // NOT eagerly materialized (r19, measured): the grid's concurrent
+    // broadcast builds LOOK like they race this cache (several
+    // overlapping ~0.65 s jobs in q121's profile), but the block
+    // manager locks each cached partition while the first task
+    // computes it — the others wait, then read. An up-front count()
+    // A/B'd flat (q121 4.52→4.71 s, q36 3.15→3.20 s medians) while
+    // paying one extra job, so the lazy cache stands.
+    (p, ivfCellsRanked(embeddings, MaxDerivedNprobe, p).cache())
   }
 
   /** The derivation measurement behind [[derivedNprobe]]: per candidate
@@ -747,18 +733,9 @@ object Similarity {
     * of the rank-≤[[MaxDerivedNprobe]] one (filter, re-rank, intersect;
     * no extra corpus passes). Cost: one broadcast-query truth scan + one
     * sample-sized cell join — the same order as the search being tuned.
-    */
-  private def tuneGridRows(
-      embeddings: DataFrame, budget: Long = CellBudget): Seq[(Int, Long)] = {
-    val key = (embeddings.queryExecution.analyzed, budget)
-    tuneCache.computeIfAbsent(key, _ =>
-      tuneGridFromRanked(embeddings, rankedForTune(embeddings, budget)._2))
-  }
-
-  /** The grid computation itself, parameterized by the ranked cell
-    * assignment: any (vec_id, cell, cell_rank ≤ [[MaxDerivedNprobe]])
-    * relation whose rank-1 row is the vector's single home cell measures
-    * its per-nprobe tune-sample recall through the identical joins.
+    * Any (vec_id, cell, cell_rank ≤ [[MaxDerivedNprobe]]) relation whose
+    * rank-1 row is the vector's single home cell measures its per-nprobe
+    * tune-sample recall through the identical joins.
     */
   private def tuneGridFromRanked(
       embeddings: DataFrame, ranked: DataFrame): Seq[(Int, Long)] = {
@@ -774,13 +751,11 @@ object Similarity {
         col("cell_a") === col("cell_b") && col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("cell_rank"), col("neighbor_id"),
         dot(col("query_emb"), col("emb_b")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"), col("np"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val topk = cand
-      .withColumn("np", explode(sequence(lit(1), lit(MaxDerivedNprobe))))
-      .filter(col("cell_rank") <= col("np"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TuneK)
+    val topk = topKPerQuery(
+      cand
+        .withColumn("np", explode(sequence(lit(1), lit(MaxDerivedNprobe))))
+        .filter(col("cell_rank") <= col("np")),
+      TuneK, within = Seq("np"))
     val truth = bruteForceTopK(embeddings, TuneQueries, TuneK)
       .select(col("query_id"), col("neighbor_id"))
     val hits = graft.util.JobDesc.labeled(embeddings.sparkSession,
@@ -806,8 +781,19 @@ object Similarity {
     * silently returning 20–30% of the true neighbors.
     */
   def derivedNprobe(embeddings: DataFrame, budget: Long = CellBudget): Int =
-    tuneGridRows(embeddings, budget)
-      .find(_._2 >= TuneHitBar).map(_._1).getOrElse(-1)
+    chosenNprobe(tuneGrid(embeddings, budget))
+
+  /** The smallest grid nprobe meeting [[TuneHitBar]], −1 when none does. */
+  private def chosenNprobe(grid: Seq[(Int, Long)]): Int =
+    grid.find(_._2 >= TuneHitBar).map(_._1).getOrElse(-1)
+
+  /** The grid of one eager call: its ranked assignment is freed as soon
+    * as the grid rows are collected.
+    */
+  private def tuneGrid(embeddings: DataFrame, budget: Long): Seq[(Int, Long)] = {
+    val (_, ranked) = tuneRanked(embeddings, budget)
+    try tuneGridFromRanked(embeddings, ranked) finally ranked.unpersist()
+  }
 
   /** The derivation grid as a relation — (np, sample_hits, chosen), the
     * q102-style observability twin of [[derivedNprobe]]: users see the
@@ -818,8 +804,8 @@ object Similarity {
     */
   def nprobeTuneGrid(
       embeddings: DataFrame, budget: Long = CellBudget): DataFrame = {
-    val rows = tuneGridRows(embeddings, budget)
-    val chosen = rows.find(_._2 >= TuneHitBar).map(_._1).getOrElse(-1)
+    val rows = tuneGrid(embeddings, budget)
+    val chosen = chosenNprobe(rows)
     val spark = embeddings.sparkSession
     import spark.implicits._
     rows.map { case (np, h) => (np, h, np == chosen) }
@@ -839,7 +825,7 @@ object Similarity {
   /** The shared derivation CTE chain (WITH included): quantized corpus →
     * p → centroids → full probe-rank assignment `asg` → sample truth →
     * per-np grid → derived np (`dnp`, −1 = degrade). Mirrors
-    * [[tuneGridRows]] + [[derivedNprobe]] decision-for-decision in
+    * [[tuneGridFromRanked]] + [[derivedNprobe]] decision-for-decision in
     * integer arithmetic, so the DERIVED KNOB ITSELF is cross-engine
     * hash-checked, not just the search it configures.
     */
@@ -942,54 +928,51 @@ object Similarity {
     // Query-scoped (r19, VERDICT r18 #5): the cache previously leaned on
     // the session owner's clearCache() — a library caller that never
     // clears kept a MEMORY_AND_DISK COPY OF THE CORPUS pinned per
-    // adaptive query. CacheScope frees it after the caller's action (the
-    // memoized rankedForTune handle is deliberately NOT freed — it is the
-    // cross-query tune-grid memo, ~3 small columns, documented in Bench).
+    // adaptive query. CacheScope frees it after the caller's action,
+    // together with the derivation's ranked assignment.
     val e = embeddings.cache()
+    if (nprobe > 0) {
+      val p = graft.util.JobDesc.labeled(e.sparkSession,
+        "ivf: corpus size")(adaptiveSubPlanes(e.count(), budget))
+      return graft.util.CacheScope.freeAfterUse(ivfTopK(e, k, nprobe, p), Seq(e))
+    }
+    val (p, ranked) = tuneRanked(e, budget)
+    val np = chosenNprobe(tuneGridFromRanked(e, ranked))
     val res =
-      if (nprobe > 0) {
-        val p = graft.util.JobDesc.labeled(e.sparkSession,
-          "ivf: corpus size")(adaptiveSubPlanes(e.count(), budget))
-        ivfTopK(e, k, nprobe, p)
-      } else {
-        val np = derivedNprobe(e, budget)
-        if (np > 0)
-          // serve from the derivation's own cached ranked assignment (r18):
-          // rank ≤ np is a filter over the MaxDerivedNprobe ranking, so the
-          // centroid + assignment pipeline is not rebuilt for the search
-          ivfTopKFromRanked(e,
-            rankedForTune(e, budget)._2.filter(col("cell_rank") <= np), k)
-        else {
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"adaptive-IVF degrade: tune-sample recall < $TuneHitBar/" +
-              s"${TuneQueries * TuneK} hits at every nprobe <= $MaxDerivedNprobe " +
-              s"- serving EXACT top-$k via ALL label cells (full-scan " +
-              "cost); prefer trained-IVF (KMeans.ivfTopKTrained) or the PQ " +
-              "refine path for corpora without label-metric structure")
-          // Degrade serving reuses the derivation's memoized ranking when
-          // it provably IS the complete one (r19): with p = 0 the memo's
-          // cells are the plain label cells the degrade wants, and when
-          // the corpus has ≤ MaxDerivedNprobe distinct cells every
-          // (vector, cell) pair already carries a rank ≤ cell count ≤
-          // MaxDerivedNprobe — so rank ≤ MaxValue over a SECOND
-          // centroid + assignment pipeline is the identical relation to
-          // the unfiltered memo. One tiny census aggregation over cached
-          // blocks replaces the duplicate pipeline (guide §2.4). p > 0 or
-          // more cells than the memo ranks → the unchanged full rebuild.
-          val (p, ranked) = rankedForTune(e, budget)
-          val cells = graft.util.JobDesc.labeled(e.sparkSession,
-            "ivf: degrade cell census")(
-            ranked.agg(countDistinct(col("cell"))).head().getLong(0))
-          if (p == 0 && cells <= MaxDerivedNprobe)
-            ivfTopKFromRanked(e, ranked, k)
-          else
-            // nprobe = Int.MaxValue probes every cell without paying a
-            // distinct count job first — cell_rank ≤ MaxValue keeps every
-            // window row, the identical relation to nprobe = <cell count>
-            ivfTopK(e, k, Int.MaxValue, 0)
-        }
+      if (np > 0)
+        // serve from the derivation's own cached ranked assignment (r18):
+        // rank ≤ np is a filter over the MaxDerivedNprobe ranking, so the
+        // centroid + assignment pipeline is not rebuilt for the search
+        ivfTopKFromRanked(e, ranked.filter(col("cell_rank") <= np), k)
+      else {
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"adaptive-IVF degrade: tune-sample recall < $TuneHitBar/" +
+            s"${TuneQueries * TuneK} hits at every nprobe <= $MaxDerivedNprobe " +
+            s"- serving EXACT top-$k via ALL label cells (full-scan " +
+            "cost); prefer trained-IVF (KMeans.ivfTopKTrained) or the PQ " +
+            "refine path for corpora without label-metric structure")
+        // Degrade serving reuses the derivation's ranking when it provably
+        // IS the complete one (r19): with p = 0 its cells are the plain
+        // label cells the degrade wants, and when the corpus has
+        // ≤ MaxDerivedNprobe distinct cells every (vector, cell) pair
+        // already carries a rank ≤ cell count ≤ MaxDerivedNprobe — so
+        // rank ≤ MaxValue over a SECOND centroid + assignment pipeline is
+        // the identical relation to the unfiltered ranking. One tiny
+        // census aggregation over cached blocks replaces the duplicate
+        // pipeline (guide §2.4). p > 0 or more cells than the derivation
+        // ranks → the unchanged full rebuild.
+        val cells = graft.util.JobDesc.labeled(e.sparkSession,
+          "ivf: degrade cell census")(
+          ranked.agg(countDistinct(col("cell"))).head().getLong(0))
+        if (p == 0 && cells <= MaxDerivedNprobe)
+          ivfTopKFromRanked(e, ranked, k)
+        else
+          // nprobe = Int.MaxValue probes every cell without paying a
+          // distinct count job first — cell_rank ≤ MaxValue keeps every
+          // window row, the identical relation to nprobe = <cell count>
+          ivfTopK(e, k, Int.MaxValue, 0)
       }
-    graft.util.CacheScope.freeAfterUse(res, Seq(e))
+    graft.util.CacheScope.freeAfterUse(res, Seq(e, ranked))
   }
 
   /** Oracle for [[ivfTopKAdaptive]]: p is computed IN SQL from COUNT(*)

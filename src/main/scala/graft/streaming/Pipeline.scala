@@ -86,21 +86,22 @@ object Pipeline {
 
   /** One micro-batch: quality metrics in one agg pass, valid/dead-letter
     * routing, pinned-column projection, three sink appends
-    * (reference `write_to_postgres`, `:363-441`).
+    * (reference `write_to_postgres`, `:363-441`). Emptiness comes from
+    * the metrics job itself (no separate `isEmpty` probe, the
+    * [[MediaIngest]] rule): an empty batch runs that one job and returns
+    * None without touching the sink.
     */
   def processBatch(
       batchDf: DataFrame,
       batchId: Long,
       sink: Sink,
       monitor: Option[PipelineMonitor] = None): Option[BatchMetrics] = {
-    if (batchDf.isEmpty) None
-    else {
-      val t0 = System.nanoTime()
-      val cached = batchDf.cache()
-      try {
-        // metrics + per-error counts in ONE job (rollup — see
-        // Quality.batchMetricsWithErrors); the reference ran ~10
-        val (m, errorCounts) = Quality.batchMetricsWithErrors(cached)
+    val t0 = System.nanoTime()
+    val cached = batchDf.cache()
+    try {
+      // metrics + per-error counts in ONE job (rollup — see
+      // Quality.batchRollup); the reference ran ~10
+      Quality.batchRollup(cached).map { case (m, errorCounts) =>
         val valid = cached.filter(col("is_valid"))
         val dead = cached.filter(!col("is_valid"))
         sink.append(SinkColumns.project(valid, SinkColumns.events), "ecommerce_events")
@@ -121,9 +122,9 @@ object Pipeline {
               "validity_rate", "processing_time_sec"),
           "data_quality_metrics")
         monitor.foreach(_.record(metrics))
-        Some(metrics)
-      } finally cached.unpersist()
-    }
+        metrics
+      }
+    } finally cached.unpersist()
   }
 
   /** S6 — wire the full query: stream → transform → dedup → foreachBatch,

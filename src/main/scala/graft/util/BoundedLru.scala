@@ -2,12 +2,12 @@ package graft.util
 
 /** Access-ordered LRU map bounded at `max` entries — the shared shape of
   * the session memo caches ([[graft.ops.KMeans]] `modelCache`,
-  * [[graft.ops.PQ]] `refineCache`/`calFloorCache`,
-  * [[graft.ops.Similarity]] `tuneCache`). Each keys on a canonicalized
-  * logical plan, which retains file-index state, so an unbounded map in a
-  * long-lived session querying many corpora would accumulate analyzed
-  * plans forever; 32 entries covers any realistic number of
-  * concurrently-served corpora while keeping retention O(1).
+  * [[graft.ops.PQ]] `refineCache`/`calFloorCache`). Each keys on a
+  * canonicalized logical plan, so the same corpus read through the same
+  * lineage hits across calls; the plan retains file-index state, so an
+  * unbounded map in a long-lived session querying many corpora would
+  * accumulate analyzed plans forever; 32 entries covers any realistic
+  * number of concurrently-served corpora while keeping retention O(1).
   *
   * Thread safety: `Collections.synchronizedMap` — its `computeIfAbsent`
   * runs under the wrapper mutex, so concurrent callers of the memoized

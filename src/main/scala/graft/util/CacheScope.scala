@@ -1,6 +1,7 @@
 package graft.util
 
-import java.util.concurrent.atomic.AtomicBoolean
+import java.lang.ref.WeakReference
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
@@ -27,15 +28,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    listener bus AFTER the action completes (Bench's timed region and
   *    rep-to-rep behavior are unchanged — it clears caches between
   *    queries anyway);
-  *  - re-execution safe: unpersist only drops blocks; a second action on
-  *    the same DataFrame recomputes through the un-cached plan with
-  *    identical semantics (and re-populates nothing — one-shot scope);
-  *  - plan-only safe: a consumer that never executes (Explain, plan
-  *    specs) registers no blocks, so the unfired listener holds only a
-  *    plan reference;
-  *  - checkpoint-aware: handles that are `localCheckpoint`ed rather than
-  *    cached are freed through [[Checkpoints.free]] (block-level RDD
-  *    unpersist) — `Dataset.unpersist` alone would be a no-op for them.
+  *  - re-execution safe: handles are `.cache()`s and unpersist only drops
+  *    blocks; a second action on the same DataFrame recomputes from
+  *    lineage with identical semantics;
+  *  - ownership safe: only the handles themselves are unpersisted, never
+  *    storage in their lineage — a caller's own `localCheckpoint` or cache
+  *    under the input survives;
+  *  - plan-only safe: the listener holds the result's plan through a
+  *    weak reference, so a result that is never executed (Explain, plan
+  *    specs, dropped compositions) frees its handles and unregisters on
+  *    the first event after its plan is garbage-collected instead of
+  *    staying registered for the session's life ([[registeredScopes]]).
   */
 object CacheScope {
   // NOTE (r19, measured then rejected): an eager cache-materializing
@@ -48,22 +51,31 @@ object CacheScope {
   // only added a job and measured flat-to-worse in 7-rep A/Bs
   // (q119 +0.37 s, q114 +0.22 s, q121/q36 flat). Lazy caches stand.
 
+  private val registered = new AtomicInteger(0)
+
+  /** Scopes still registered (not yet fired or expired) process-wide — a
+    * leak gauge: it returns to its baseline once every scoped result was
+    * executed or dropped.
+    */
+  def registeredScopes: Int = registered.get()
+
   def freeAfterUse(result: DataFrame, handles: Seq[DataFrame]): DataFrame = {
     val spark = result.sparkSession
-    val target = result.queryExecution.analyzed
+    val target = new WeakReference(result.queryExecution.analyzed)
     val fired = new AtomicBoolean(false)
     lazy val listener: QueryExecutionListener = new QueryExecutionListener {
       private def maybeFree(qe: QueryExecution): Unit = {
-        val hit =
-          try qe.analyzed.exists(_.sameResult(target))
-          catch { case _: Throwable => false }
+        val plan = target.get
+        val hit = plan == null ||
+          (try qe.analyzed.exists(_.sameResult(plan))
+           catch { case _: Throwable => false })
         if (hit && fired.compareAndSet(false, true)) {
           handles.foreach { h =>
             try h.unpersist(blocking = false) catch { case _: Throwable => () }
-            try Checkpoints.free(h) catch { case _: Throwable => () }
           }
           try spark.listenerManager.unregister(listener)
           catch { case _: Throwable => () }
+          registered.decrementAndGet()
         }
       }
       override def onSuccess(
@@ -73,6 +85,7 @@ object CacheScope {
           funcName: String, qe: QueryExecution, exception: Exception): Unit =
         maybeFree(qe)
     }
+    registered.incrementAndGet()
     spark.listenerManager.register(listener)
     result
   }

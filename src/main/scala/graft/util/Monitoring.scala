@@ -96,17 +96,3 @@ class PipelineMonitor(
 
   def windowSnapshot: Seq[BatchMetrics] = synchronized(window.toSeq)
 }
-
-/** Times a batch and records it on close (reference `BatchTracker`,
-  * `metrics.py:344-369`).
-  */
-class BatchTracker(monitor: PipelineMonitor, batchId: Long) {
-  private val start = System.nanoTime()
-  def finish(total: Long, valid: Long, invalid: Long,
-      errorCounts: Map[String, Long] = Map.empty): BatchMetrics = {
-    val m = BatchMetrics(batchId, total, valid, invalid,
-      (System.nanoTime() - start) / 1e9, errorCounts)
-    monitor.record(m)
-    m
-  }
-}

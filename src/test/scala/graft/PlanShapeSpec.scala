@@ -332,10 +332,12 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
-  test("constant-cap capped Jaccard stays lazy AND its plan keeps the " +
-    "posting equi-join shape (r10 override contract)") {
+  test("capped Jaccard at a binding derived cap keeps the posting equi-join shape") {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val p = graft.ops.NearDup.ngramJaccardPairsCapped(docs, maxDf = 50)
+    // q102's budget: the derived cap binds, so the hot-correction branch
+    // (broadcast hot set, capped posting self-join) is what is planned
+    assert(graft.ops.NearDup.derivedDfCap(docs, fanoutBudget = 2) < Int.MaxValue)
+    val p = graft.ops.NearDup.ngramJaccardPairsCapped(docs, fanoutBudget = 2)
       .queryExecution.executedPlan.toString
     assert(p.contains("Exchange hashpartitioning(shingle"), p)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)

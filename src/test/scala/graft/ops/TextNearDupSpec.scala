@@ -260,11 +260,15 @@ class TextNearDupSpec extends SparkSpec {
 
     // planted hot distribution: 150 docs sharing one boilerplate block (df
     // of its shingles > cap) must not hide a genuine containment that rides
-    // on rare shingles — and the hot-only overlap pairs are NOT candidates
+    // on rare shingles — and the hot-only overlap pairs are NOT candidates.
+    // Histogram {1 → 326, 2 → 4, 151 → 18}, postings 3052: cumulative
+    // cost 342 at df 2 fits 100·3052, 410760 at df 151 does not → the
+    // default budget derives cap 2 and the boilerplate is hot
     val boiler = (1 to 20).map(i => s"hot$i").mkString(" ")
     val hotDocs = (100L until 250L).map(i => (i, s"$boiler filler${i}a filler${i}b"))
     val hot = docs((hotDocs :+ (1L -> inner) :+ (2L -> (boiler + " " + outer))): _*)
-    val got = NearDup.ngramContainmentCapped(hot, maxDf = 100)
+    assert(NearDup.derivedDfCap(hot, fanoutBudget = 100) == 2)
+    val got = NearDup.ngramContainmentCapped(hot, fanoutBudget = 100)
       .filter(col("contained") === 1L).collect()
     assert(got.length == 1 && got.head.getAs[Long]("container") == 2L)
     assert(got.head.getAs[Double]("containment") == 1.0)
@@ -383,14 +387,17 @@ class TextNearDupSpec extends SparkSpec {
       (3L, phrase),                             // 3 and 4 share ONLY hot shingles
       (4L, phrase),
       (5L, s"$phrase six seven eight nine ten"))
-    // With maxDf=2 the phrase 3-grams (df=5) are hot, doc 1/2's tail (df=2)
-    // is rare. Uncapped finds both dup pairs; capped keeps (1,2) — found via
-    // rare shingles, jaccard still 1.0 because hot shingles are corrected
-    // back in — and documents the designed recall cut for hot-only (3,4).
+    // Histogram {1 → 5, 2 → 5, 5 → 2}, postings 25: cumulative cost 25 at
+    // df 2 fits 2·25, 75 at df 5 does not → budget 2 derives cap 2, so the
+    // phrase 3-grams (df=5) are hot and doc 1/2's tail (df=2) is rare.
+    // Uncapped finds both dup pairs; capped keeps (1,2) — found via rare
+    // shingles, jaccard still 1.0 because hot shingles are corrected back
+    // in — and documents the designed recall cut for hot-only (3,4).
     val uncapped = NearDup.ngramJaccardPairs(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(uncapped.toSet == Set((1L, 2L, 1.0), (3L, 4L, 1.0)))
-    val capped = NearDup.ngramJaccardPairsCapped(df, maxDf = 2)
+    assert(NearDup.derivedDfCap(df, fanoutBudget = 2) == 2)
+    val capped = NearDup.ngramJaccardPairsCapped(df, fanoutBudget = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(capped.toSet == Set((1L, 2L, 1.0)))
   }
@@ -400,12 +407,15 @@ class TextNearDupSpec extends SparkSpec {
       (1L, "h1 h2 h3 h4 a b c"),
       (2L, "h1 h2 h3 h4 a b d"),
       (3L, "h1 h2 h3 h4 x y z"))
-    // cap 2: "h1 h2 h3"/"h2 h3 h4" have df=3 → hot; "h3 h4 a"/"h4 a b" have
+    // Histogram {1 → 5, 2 → 2, 3 → 2}, postings 15: cumulative cost 13 at
+    // df 2 fits budget·15 for budget 1–2, 31 at df 3 does not → cap 2.
+    // "h1 h2 h3"/"h2 h3 h4" have df=3 → hot; "h3 h4 a"/"h4 a b" have
     // df=2 → rare. Pair (1,2): n_rare=2, hot_common=2, sizes 5/5 →
     // jaccard = 4/6. Must equal the uncapped exact value bit-for-bit.
     val expect = NearDup.ngramJaccardPairs(df)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val got = NearDup.ngramJaccardPairsCapped(df, maxDf = 2)
+    assert(NearDup.derivedDfCap(df, fanoutBudget = 2) == 2)
+    val got = NearDup.ngramJaccardPairsCapped(df, fanoutBudget = 2)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(got.keySet == Set((1L, 2L)))
     assert(got((1L, 2L)) == expect((1L, 2L)))
@@ -433,12 +443,12 @@ class TextNearDupSpec extends SparkSpec {
     assert(stats.getLong(stats.fieldIndex("derived_cap")) == 2L)
     assert(NearDup.derivedDfCap(df, fanoutBudget = 2) == 2)
     // generous budget: even uncapped cost (30) ≤ 100·8 → capping buys
-    // nothing → sentinel -1 / Int.MaxValue, and the maxDf=0 entry point
+    // nothing → sentinel -1 / Int.MaxValue, and the capped entry point
     // must then equal the exact prefix-filtered result
     val rich = NearDup.dfCapStats(df, maxDf = 2, fanoutBudget = 100).head()
     assert(rich.getLong(rich.fieldIndex("derived_cap")) == -1L)
     assert(NearDup.derivedDfCap(df) == Int.MaxValue)
-    val derived = NearDup.ngramJaccardPairsCapped(df, maxDf = 0)
+    val derived = NearDup.ngramJaccardPairsCapped(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exact = NearDup.ngramJaccardPairs(df, minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -780,30 +790,6 @@ class TextNearDupSpec extends SparkSpec {
     // same corpus under the default budget: runs, and finds the clones
     val ok = NearDup.ngramJaccardPairsCapped(clones)
     assert(ok.count() == 40L * 39 / 2)
-  }
-
-  test("constant-cap override is LAZY: constructing the DataFrame runs no " +
-    "Spark job; the derived default is eager by design") {
-    val df = docs(
-      (1L, "a b c d e"), (2L, "a b c d f"), (3L, "x y z w v"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val planOnly = NearDup.ngramJaccardPairsCapped(df, maxDf = 100)
-      planOnly.explain() // plan consumers must stay job-free too
-      Thread.sleep(500)
-      assert(jobs.get() == 0,
-        s"constant-cap construction launched ${jobs.get()} job(s)")
-      NearDup.ngramJaccardPairsCapped(df) // derived default: jobs expected
-      Thread.sleep(500)
-      assert(jobs.get() > 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("resolveDupRoots re-points chains of any depth at the root; " +

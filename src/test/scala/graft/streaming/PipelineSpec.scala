@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.ops.Quality
 import graft.sink.InMemorySink
 import graft.util.PipelineMonitor
 
@@ -111,6 +112,60 @@ class PipelineSpec extends SparkSpec {
       out.processAllAvailable()
       assert(spark.table("dedup_ww_out").count() == 1)
     } finally out.stop()
+  }
+
+  /** Spark jobs `body` launches, counted by job group on the listener
+    * bus; a marker job in a second group proves the bus has delivered
+    * every earlier start event.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(p =>
+          seen.add(String.valueOf(p.getProperty("spark.jobGroup.id"))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(group + "-end", "marker")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 15000
+      while (!seen.contains(group + "-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a batch learns emptiness from its metrics job: no isEmpty probe") {
+    // batches read from CSV files, as the stream delivers them (a local
+    // relation would answer isEmpty without any job)
+    val empty = tmpDir("graft-jobs-empty")
+    val full = tmpDir("graft-jobs-full")
+    dropCsv(empty, "b0.csv", Seq.empty)
+    dropCsv(full, "b1.csv", Seq(
+      """1,2024-01-10 10:00:00,7,view,5.0,{}""",
+      """2,2024-01-10 10:01:00,8,bogus,5.0,{}"""))
+    def batch(dir: Path) = Pipeline.transform(
+      spark.read.schema(Pipeline.csvSchema).option("header", "true").csv(dir.toString),
+      anchor)
+    val metricsJobs = {
+      val cached = batch(full).cache()
+      try jobsOf(Quality.batchRollup(cached)) finally cached.unpersist()
+    }
+    val sink = new InMemorySink
+    // an empty batch launches one job, as the isEmpty probe did
+    assert(jobsOf(Pipeline.processBatch(batch(empty), 0L, sink)) == 1)
+    assert(sink.tables.isEmpty)
+    // a full batch adds one job per non-local sink append (events, dead
+    // letters; the one-row metrics append is a local relation) on top of
+    // the metrics job(s)
+    assert(jobsOf(Pipeline.processBatch(batch(full), 1L, sink)) == metricsJobs + 2)
   }
 
   test("empty batches are short-circuited") {
